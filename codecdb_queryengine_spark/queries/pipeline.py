@@ -1136,13 +1136,13 @@ def _write_mutation_files(base: str, src: str, gens) -> None:
     writes are independent jobs — run them 2-in-flight (guide §2.6); the
     mtimes are set explicitly, so completion order is irrelevant."""
     import time as _time
-    from concurrent.futures import ThreadPoolExecutor
+
+    from codecdb_queryengine_spark.session import overlap
 
     now = _time.time()
     os.makedirs(src, exist_ok=True)
 
-    def _one(i_g) -> None:
-        i, g = i_g
+    def _one(i: int, g) -> None:
         tmp = os.path.join(base, f"mut{i}")
         g.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = next(
@@ -1153,8 +1153,7 @@ def _write_mutation_files(base: str, src: str, gens) -> None:
         os.rename(os.path.join(tmp, part), dst)
         os.utime(dst, (now + i, now + i))
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(pool.map(_one, enumerate(gens)))
+    overlap([lambda i=i, g=g: _one(i, g) for i, g in enumerate(gens)], 2)
 
 
 def emb_stream_mutations(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5375,6 +5374,7 @@ def docs_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     conjunctive search through the plan-time bucket-pruned read path —
     the text twin of emb_stream_index_ingest, gated by the same
     docs_search_index oracle."""
+    from codecdb_queryengine_spark.sources import io as IO
     from codecdb_queryengine_spark.sources import text_index as TI
     from codecdb_queryengine_spark.streaming import events as E
     from codecdb_queryengine_spark.streaming import sinks as SK
@@ -5392,7 +5392,7 @@ def docs_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.join(base, "postings"),
         os.path.join(base, "ckpt"),
         partition_by=("t_bucket",),
-        n_write_tasks=TI._bucket_write_parts(spark, 32),
+        n_write_tasks=IO.size_tasks(spark, 32, TI.BUCKETS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     TI._write_meta(spark, base, 32)
@@ -5542,7 +5542,7 @@ def docs_stream_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         postings_path,
         os.path.join(base, "ckpt"),
         partition_by=("t_bucket",),
-        n_write_tasks=TI._bucket_write_parts(spark, 32),
+        n_write_tasks=IO.size_tasks(spark, 32, TI.BUCKETS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     TI._write_meta(spark, base, 32)
@@ -7143,7 +7143,7 @@ def emb_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=("c_list",),
         # the quantizer is already driver-side: size each micro-batch's
         # write to the K directories it creates (guide §2.2/§6)
-        n_write_tasks=IO.write_task_count(spark, len(cents)),
+        n_write_tasks=IO.size_tasks(spark, len(cents), IO.DIRS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     return AI.ivf_index_topk(spark, base, _query_vectors(emb), k=_TOP_K, nprobe=2)
@@ -7194,7 +7194,7 @@ def emb_stream_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc, lists_path, os.path.join(base, "ckpt"), partition_by=("c_list",),
         # each of the four micro-batches writes ~K list dirs from what
         # would otherwise be ONE input-file task (guide §2.2/§6)
-        n_write_tasks=IO.write_task_count(spark, len(cents)),
+        n_write_tasks=IO.size_tasks(spark, len(cents), IO.DIRS_PER_WRITE_TASK),
     )
     q.awaitTermination()
     files_before = IO.data_file_count(lists_path)

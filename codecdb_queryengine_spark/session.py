@@ -87,3 +87,19 @@ def get_spark(app_name: str = "codecdb-queryengine-spark", **extra_conf: str) ->
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def overlap(thunks, width: int) -> list:
+    """Run independent driver-side actions concurrently, at most `width`
+    in flight, so one job's task tail back-fills with the next job's
+    tasks.  A single thunk runs inline.  Waits for every thunk, returns
+    their results in argument order and re-raises the first failure in
+    that order."""
+    thunks = list(thunks)
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]

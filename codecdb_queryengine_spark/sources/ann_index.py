@@ -40,6 +40,8 @@ from codecdb_queryengine_spark.operators.similarity import (
     cosine_pre,
     norm,
 )
+from codecdb_queryengine_spark.session import overlap
+from codecdb_queryengine_spark.sources import io as IO
 
 
 # Serving-side scan cache (OPT-IN via the serve functions' cached=True):
@@ -144,17 +146,16 @@ def ivf_index_build(
         # the centroid DataFrame, not the written artifact): overlap them
         # (guide §2.6; was three sequential actions, now two overlapped +
         # the lists write).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_c = pool.submit(_write_cents)
-            f_n = pool.submit(
+        _, rows = overlap(
+            [
+                _write_cents,
                 lambda: lists.groupBy("c_list")
                 .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            )
-            f_c.result()
-            counts = {int(r["c_list"]): int(r["_n"]) for r in f_n.result()}
+                .collect(),
+            ],
+            2,
+        )
+        counts = {int(r["c_list"]): int(r["_n"]) for r in rows}
         _write_lists(lists, path, max_list_rows, precomputed_counts=counts)
     else:
         _write_cents()
@@ -209,25 +210,6 @@ def _list_dir(values) -> list[str]:
     return [f"c_list={int(v)}" for v in sorted(values)]
 
 
-# Layout writes pay per-TASK overhead, not per-row, at maintenance scale: a
-# dynamic-partition write keyed repartition inherits spark.sql.shuffle.
-# partitions (64 locally), and 64 tasks writing ~140 tiny partition dirs
-# measured 3.2 s vs 1.05 s at 8 tasks for the identical layout (r11
-# optimization round, guide §2.2/§6 — fewer, larger write tasks).  Size the
-# exchange to the number of physical partition dirs instead: ~DIRS_PER_TASK
-# dirs per task, still capped by the session's shuffle parallelism so a
-# 100-TB index (millions of lists) saturates the cluster exactly as before.
-# Hash partitioning on the full partition-column tuple keeps every dir's
-# rows in ONE task, so the one-file-per-directory layout is unchanged.
-# (io.write_task_count is the one shared sizing rule.)
-
-
-def _write_parts(spark: SparkSession, n_dirs: int) -> int:
-    from codecdb_queryengine_spark.sources import io as IO
-
-    return IO.write_task_count(spark, n_dirs)
-
-
 def ivf_index_append(
     new_vectors: DataFrame,
     path: str,
@@ -269,14 +251,12 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
     (vectors+norms for IVF, PQ codes for IVFADC) with its `c_list`
     routing column; everything from here down is pure partition routing
     (see ivf_index_append's docstring for the slot-aware contract)."""
-    from codecdb_queryengine_spark.sources import io as IO
-
     lists_path = os.path.join(path, "lists")
     existing = spark.read.parquet(lists_path)
     _check_append_schema(assigned, existing)
     if "c_slot" not in existing.columns:
         # Per-list routing plan: batch-sized aggregate; it sizes the
-        # pre-write exchange (see _write_parts).
+        # pre-write exchange (one task per DIRS_PER_WRITE_TASK list dirs).
         new_counts = {
             int(r["c_list"]): int(r["_n"])
             for r in assigned.groupBy("c_list")
@@ -284,7 +264,10 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
             .collect()
         }
         (
-            assigned.repartition(_write_parts(spark, len(new_counts)), "c_list")
+            assigned.repartition(
+                IO.size_tasks(spark, len(new_counts), IO.DIRS_PER_WRITE_TASK),
+                "c_list",
+            )
             .write.mode("append")
             .partitionBy("c_list")
             .parquet(lists_path)
@@ -357,7 +340,9 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
                 sorted(stay.items()),
             )
             .repartition(
-                _write_parts(spark, sum(stay.values())), "c_list", "c_slot"
+                IO.size_tasks(spark, sum(stay.values()), IO.DIRS_PER_WRITE_TASK),
+                "c_list",
+                "c_slot",
             )
             .write.mode("append")
             .partitionBy("c_list", "c_slot")
@@ -382,7 +367,11 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
         (
             _apply_slots(merged, spark, plan)
             .repartition(
-                _write_parts(spark, sum(s for _, s in plan)), "c_list", "c_slot"
+                IO.size_tasks(
+                    spark, sum(s for _, s in plan), IO.DIRS_PER_WRITE_TASK
+                ),
+                "c_list",
+                "c_slot",
             )
             .write.mode("overwrite")
             .partitionBy("c_list", "c_slot")
@@ -390,14 +379,7 @@ def _append_assigned(spark: SparkSession, path: str, assigned: DataFrame) -> Non
         )
         IO.swap_partition_dirs(lists_path, tmp, promote=_list_dir(grow))
 
-    writes = ([_write_stay] if stay else []) + ([_write_grow] if grow else [])
-    if len(writes) == 1:
-        writes[0]()
-    elif writes:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            list(pool.map(lambda f: f(), writes))
+    overlap(([_write_stay] if stay else []) + ([_write_grow] if grow else []), 2)
     invalidate_layout(path)
 
 
@@ -460,8 +442,6 @@ def _upsert_assigned(
     IVFADC) keyed by `n_id` with its new `c_list`; everything from here
     down is locate → touched-list rewrite → journaled swap (see
     ivf_index_upsert's docstring for the contract)."""
-    from codecdb_queryengine_spark.sources import io as IO
-
     lists_path = os.path.join(path, "lists")
     existing = spark.read.parquet(lists_path)
     split = "c_slot" in existing.columns
@@ -557,13 +537,7 @@ def _upsert_assigned(
             keep = keep | F.col("_t").isNotNull()
         return base.filter(keep).collect()
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_batch = pool.submit(_batch_stats)
-        f_loc = pool.submit(_loc_stats)
-        stats = f_batch.result()
-        loc_stats = f_loc.result()
+    stats, loc_stats = overlap([_batch_stats, _loc_stats], 2)
     g = next((r for r in stats if r["_gid"] == 3), None)
     if g is None or not g["_n"]:
         return 0  # empty mutation batch (e.g. a drained CDC stream's tail)
@@ -618,7 +592,9 @@ def _upsert_assigned(
         n_dirs = sum(1 for n in merged_n.values() if n > 0)
     tmp = lists_path.rstrip("/") + ".upserting"
     (
-        merged.repartition(max(1, _write_parts(spark, n_dirs)), *part_cols)
+        merged.repartition(
+            IO.size_tasks(spark, n_dirs, IO.DIRS_PER_WRITE_TASK), *part_cols
+        )
         .write.mode("overwrite")
         .partitionBy(*part_cols)
         .parquet(tmp)
@@ -679,9 +655,12 @@ def _write_lists(
     regrowing hot lists.
 
     The pre-write exchange is sized to the number of physical partition
-    directories (_write_parts): the capped path knows it exactly from its
+    directories (io.size_tasks): the capped path knows it exactly from its
     own slot plan; the uncapped path uses `n_dirs_hint` (the centroid
-    count) and falls back to the keyed default when no hint is given."""
+    count) and falls back to the keyed default when no hint is given.
+    Hash partitioning on the full partition-column tuple keeps each
+    directory's rows in ONE task, so the layout stays one file per
+    directory at any task count."""
     spark = lists.sparkSession
     part_cols = ["c_list"]
     n_dirs = n_dirs_hint
@@ -698,7 +677,9 @@ def _write_lists(
         lists = _apply_slots(lists, spark, plan)
         part_cols = ["c_list", "c_slot"]
     shaped = (
-        lists.repartition(_write_parts(spark, n_dirs), *part_cols)
+        lists.repartition(
+            IO.size_tasks(spark, n_dirs, IO.DIRS_PER_WRITE_TASK), *part_cols
+        )
         if n_dirs is not None
         else lists.repartition(*part_cols)
     )
@@ -707,39 +688,24 @@ def _write_lists(
         .partitionBy(*part_cols)
         .parquet(os.path.join(path, "lists"))
     )
+    import pyarrow as pa
+
     cap = None if max_list_rows is None else int(max_list_rows)
-    meta = os.path.join(path, "lists_meta")
-    from codecdb_queryengine_spark.sources import io as IO
-
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            meta, pa.table({"max_list_rows": pa.array([cap], type=pa.int64())})
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        spark.createDataFrame([(cap,)], "max_list_rows long").write.mode(
-            "overwrite"
-        ).parquet(meta)
+    IO.meta_write(
+        spark,
+        os.path.join(path, "lists_meta"),
+        pa.table({"max_list_rows": pa.array([cap], type=pa.int64())}),
+    )
     invalidate_layout(path)
 
 
 def _read_layout_meta(spark: SparkSession, path: str) -> int | None:
     """The layout's persisted max_list_rows cap, or None when the layout
     predates the meta artifact or was built uncapped."""
-    meta = os.path.join(path, "lists_meta")
-    if not os.path.exists(meta):
+    t = IO.meta_read(spark, os.path.join(path, "lists_meta"))
+    if t is None or not t.num_rows:
         return None
-    from codecdb_queryengine_spark.sources import io as IO
-
-    t = IO.tiny_meta_read(meta)
-    if t is not None:
-        v = t.column("max_list_rows")[0].as_py() if t.num_rows else None
-    else:
-        rows = spark.read.parquet(meta).collect()
-        v = rows[0]["max_list_rows"] if rows else None
+    v = t.column("max_list_rows")[0].as_py()
     return None if v is None else int(v)
 
 
@@ -819,40 +785,23 @@ def _write_model_table(
     fields: tuple[tuple[str, str], ...],
 ) -> None:
     """Persist a tiny driver-side model artifact ([(ints and [int,...])
-    tuples]) — pyarrow on local paths (~5 ms vs a 0.3-0.5 s Spark job per
-    artifact; a trained build writes several), the Spark write kept as
-    the schemed-storage fallback.  `fields` is ((name, "long"|"array"),
-    ...).  Readers (_collect_rows / spark.read.parquet) see the same
-    values either way."""
-    from codecdb_queryengine_spark.sources import io as IO
+    tuples]) through the metadata-table path (io.meta_write).  `fields`
+    is ((name, "long"|"array"), ...)."""
+    import pyarrow as pa
 
-    done = False
-    if rows:
-        try:
-            import pyarrow as pa
-
-            cols = list(zip(*rows))
-            done = IO.tiny_meta_write(
-                table_dir,
-                pa.table(
-                    {
-                        name: pa.array(
-                            list(col),
-                            type=pa.list_(pa.int64()) if kind == "array" else pa.int64(),
-                        )
-                        for (name, kind), col in zip(fields, cols)
-                    }
-                ),
-            )
-        except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-            done = False
-    if not done:
-        schema = ", ".join(
-            f"{n} {'array<long>' if k == 'array' else 'long'}" for n, k in fields
-        )
-        spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-            table_dir
-        )
+    IO.meta_write(
+        spark,
+        table_dir,
+        pa.table(
+            {
+                name: pa.array(
+                    [r[i] for r in rows],
+                    type=pa.list_(pa.int64()) if kind == "array" else pa.int64(),
+                )
+                for i, (name, kind) in enumerate(fields)
+            }
+        ),
+    )
 
 
 def ivf_index_build_micro(
@@ -1097,26 +1046,21 @@ def _read_pq_models(spark: SparkSession, path: str) -> tuple[list, list]:
 def _collect_rows(
     spark: SparkSession, table_dir: str, cols: tuple[str, ...]
 ) -> list[tuple]:
-    """Sorted tuples of a (tiny) model artifact's columns — driver-side
-    through pyarrow on local paths (no Spark job per artifact read; a
-    serve/encode pass touches several), the usual collect on schemed
-    storage.  Ints stay ints and array cells become [int, ...] either
-    way, so the literal-model expressions are bit-identical."""
-    from codecdb_queryengine_spark.sources import io as IO
+    """Sorted tuples of a (tiny) model artifact's columns, read through
+    the metadata-table path (io.meta_read).  Ints stay ints and array
+    cells become [int, ...], so the literal-model expressions are
+    bit-identical whichever engine wrote the artifact."""
 
     def _norm(v):
         if isinstance(v, list):
             return [int(x) for x in v]
         return int(v)
 
-    t = IO.tiny_meta_read(table_dir)
-    if t is not None:
-        data = [t.column(c).to_pylist() for c in cols]
-        return sorted(tuple(_norm(v) for v in row) for row in zip(*data))
-    return sorted(
-        tuple(_norm(r[c]) for c in cols)
-        for r in spark.read.parquet(table_dir).collect()
-    )
+    t = IO.meta_read(spark, table_dir)
+    if t is None:
+        raise FileNotFoundError(f"no model artifact table at {table_dir}")
+    data = [t.column(c).to_pylist() for c in cols]
+    return sorted(tuple(_norm(v) for v in row) for row in zip(*data))
 
 
 def _encode_against_layout(

@@ -27,37 +27,45 @@ from pyspark.sql import functions as F
 READ_FORMATS = ("parquet", "csv", "json", "orc", "xml")
 
 
-# --- tiny metadata artifacts (r11 optimization round) ------------------------
+# --- metadata tables: one contract for every persisted layout ---------------
 #
-# Index layouts persist 1-row metadata tables (bucket counts, slot caps) next
-# to the data.  Reading or writing one through a Spark job costs a full
-# job-launch round trip (~0.3-0.5 s measured locally) for a handful of bytes,
-# and the lifecycle gates touch several per maintenance pass.  On a LOCAL
-# filesystem the same parquet bytes can be moved driver-side through pyarrow
-# in single-digit milliseconds; on schemed storage (hdfs://, s3a://) these
-# helpers return None/False and callers fall back to the Spark path, so
-# cluster deployments behave exactly as before.  The on-disk format stays
-# plain parquet either way — both engines read each other's files.
+# Index layouts persist small metadata tables next to their data: bucket
+# counts, slot caps, z-order parameters, trained quantizer models, model-
+# store vectors.  All of them go through meta_write / meta_read, and no
+# caller decides how they are stored:
+#
+# - Format: plain parquet, a directory of `*.parquet` part files (`_SUCCESS`
+#   markers ignored).  Both engines read each other's files, so a table
+#   written on either path reads back on either path.
+# - Local paths (bare, or `file:` URIs): pyarrow, driver-side, in
+#   milliseconds.  A Spark job costs a ~0.3-0.5 s launch round trip for a
+#   handful of bytes, and a maintenance pass touches several tables.
+# - Schemed storage (hdfs://, s3a://, ...): Spark —
+#   `createDataFrame(table)` on write, `read.parquet(path).toArrow()` on
+#   read.
+# - Existence: meta_read returns None exactly when the directory is absent
+#   on the path that applies; every other read failure propagates.
+# - Atomicity (local): a write stages the whole table in the sibling
+#   `<path>.staging`, then promotes it — a bare rename when no table exists
+#   yet, the journaled swap_layout otherwise — so a crash at any step
+#   leaves the old table or the new one, never neither.  Both functions
+#   roll an interrupted swap forward first (recover_swap).
 
 
-# Dynamic-partition writes pay per-TASK overhead AND per-file serial cost
-# within a task: one task writing ~140 partition dirs measured 3.1 s vs
-# 1.05 s spread over 8 tasks for the identical one-file-per-dir layout (r11
-# optimization round).  Size such writes to ~DIRS_PER_TASK directories per
-# task, capped by the session's shuffle parallelism (the cluster-scale
-# knob).  Shared by the index layouts (ann_index/text_index keep their own
-# thin wrappers) and the partitioned compaction below.
-_DIRS_PER_WRITE_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_DIRS_PER_WRITE_TASK", "16"))
-)
+def size_tasks(spark: SparkSession, units: int, per_task: int) -> int:
+    """Task count for a write over `units` of work: one task per
+    `per_task` units, at least one, at most the session's shuffle
+    parallelism (the cluster-scale knob).  Layout writes pay per-TASK
+    overhead and per-file serial cost within a task — one task writing ~140
+    partition dirs measured 3.1 s vs 1.05 s over 8 tasks for the identical
+    layout — so they are sized to their work instead of inheriting
+    spark.sql.shuffle.partitions."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-int(units) // per_task)))
 
 
-def write_task_count(spark: SparkSession, n_dirs: int) -> int:
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 64
-    return max(1, min(cap, -(-int(n_dirs) // _DIRS_PER_WRITE_TASK)))
+# Partition directories per task for dynamic-partition layout writes.
+DIRS_PER_WRITE_TASK = 16
 
 
 _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*:")
@@ -67,8 +75,10 @@ def _local_fs_path(path: str) -> str | None:
     """The bare filesystem path when `path` is local, else None.  Any
     scheme prefix (`hdfs:`, `s3a://`, …) is non-local EXCEPT the file
     scheme, which Spark accepts in single-slash form (`file:/x`) as well
-    as `file://...` — both must resolve to the same os path the Spark
-    fallback would use (r11 ADVICE)."""
+    as `file://...` — both resolve to the same os path Spark uses.  The
+    path is NOT percent-decoded: Hadoop's Path keeps `%20` literal (Spark
+    writes `file:/a%20b` to a directory named `a%20b`), and decoding would
+    send the two I/O paths to different directories."""
     if _SCHEME_RE.match(path):
         if not path.startswith("file:"):
             return None
@@ -81,38 +91,59 @@ def _local_fs_path(path: str) -> str | None:
     return path
 
 
-def tiny_meta_write(path: str, table) -> bool:
-    """Write a (tiny) pyarrow table as `<path>/part-00000.parquet`,
-    replacing the directory.  Returns False on schemed paths (caller
-    falls back to a Spark write)."""
+def fs_exists(spark: SparkSession, path: str) -> bool:
+    """Existence through the Hadoop FileSystem of the path's scheme, so
+    the check is correct on hdfs:// and s3a:// layouts too."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return bool(fs.exists(hpath))
+
+
+def _parquet_parts(local_dir: str) -> list[str]:
+    import glob
+
+    return sorted(glob.glob(os.path.join(local_dir, "*.parquet")))
+
+
+def meta_write(spark: SparkSession, path: str, table) -> None:
+    """Replace the metadata table at `path` with the pyarrow `table`."""
+    lp = _local_fs_path(path)
+    if lp is None:
+        spark.createDataFrame(table).coalesce(1).write.mode("overwrite").parquet(
+            path
+        )
+        return
     import shutil
 
     import pyarrow.parquet as pq
 
+    recover_swap(lp)
+    staging = lp.rstrip("/") + ".staging"
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    pq.write_table(table, os.path.join(staging, "part-00000.parquet"))
+    if os.path.isdir(lp):
+        swap_layout(lp, staging)
+    else:
+        os.rename(staging, lp)
+
+
+def meta_read(spark: SparkSession, path: str):
+    """The metadata table at `path` as a pyarrow table, or None when the
+    directory does not exist."""
     lp = _local_fs_path(path)
     if lp is None:
-        return False
-    shutil.rmtree(lp, ignore_errors=True)
-    os.makedirs(lp, exist_ok=True)
-    pq.write_table(table, os.path.join(lp, "part-00000.parquet"))
-    return True
-
-
-def tiny_meta_read(path: str):
-    """Read a (tiny) parquet table directory driver-side: a pyarrow table
-    over every `*.parquet` part file (Spark's _SUCCESS markers skipped), or
-    None on schemed paths / missing dirs (caller falls back to Spark)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    lp = _local_fs_path(path)
-    if lp is None or not os.path.isdir(lp):
+        if not fs_exists(spark, path):
+            return None
+        return spark.read.parquet(path).toArrow()
+    recover_swap(lp)
+    if not os.path.isdir(lp):
         return None
-    parts = sorted(glob.glob(os.path.join(lp, "*.parquet")))
+    parts = _parquet_parts(lp)
     if not parts:
-        return None
+        raise FileNotFoundError(f"{path}: metadata table has no parquet part files")
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
     return pa.concat_tables([pq.read_table(p) for p in parts])
 
@@ -122,14 +153,12 @@ def tiny_meta_col_max(path: str, col: str):
     statistics of a (tiny) local table directory — no data read, no Spark
     job.  None on schemed paths / missing dirs / absent stats (caller
     falls back to a Spark aggregate)."""
-    import glob
-
     import pyarrow.parquet as pq
 
     lp = _local_fs_path(path)
     if lp is None or not os.path.isdir(lp):
         return None
-    parts = sorted(glob.glob(os.path.join(lp, "*.parquet")))
+    parts = _parquet_parts(lp)
     if not parts:
         return None
     best = None
@@ -598,7 +627,11 @@ def compact_partitioned(
     # one file per directory at any task count, so only wall time changes
     n_tasks = max(
         n_files,
-        write_task_count(spark, len(_leaf_partition_dirs(path, len(partition_by)))),
+        size_tasks(
+            spark,
+            len(_leaf_partition_dirs(path, len(partition_by))),
+            DIRS_PER_WRITE_TASK,
+        ),
     )
     tmp = path.rstrip("/") + ".compacting"
     (

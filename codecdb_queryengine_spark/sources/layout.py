@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from codecdb_queryengine_spark.sources import io as IO
+
 
 def z_value(cols: Sequence[Column], bits: int = 10) -> Column:
     """Morton interleave of `bits` low bits of each column (non-negative
@@ -85,7 +87,8 @@ def zorder_write(
     z = z_value([F.col(c) for c in cols], bits).alias("__z")
     zdf = df.withColumn("__z", z)
     zdf = zdf.repartitionByRange(
-        num_files or _sort_write_parts(df.sparkSession, n_rows), "__z"
+        num_files or IO.size_tasks(df.sparkSession, n_rows, _SORT_ROWS_PER_TASK),
+        "__z",
     )
     zdf.sortWithinPartitions("__z").drop("__z").write.mode(mode).parquet(path)
 
@@ -119,77 +122,45 @@ def zorder_write(
 
 
 def _zmeta_path(path: str) -> str:
-    import os
-
     return os.path.join(path, "_zmeta")
 
 
 def _write_zmeta(
     df: DataFrame, path: str, cols: Sequence[str], bits: int, prefix_bits: int
 ) -> None:
-    from codecdb_queryengine_spark.sources import io as IO
+    import pyarrow as pa
 
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            _zmeta_path(path),
-            pa.table(
-                {
-                    "cols": pa.array([list(cols)], type=pa.list_(pa.string())),
-                    "bits": pa.array([int(bits)], type=pa.int32()),
-                    "prefix_bits": pa.array([int(prefix_bits)], type=pa.int32()),
-                }
-            ),
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        df.sparkSession.createDataFrame(
-            [(list(cols), int(bits), int(prefix_bits))],
-            "cols array<string>, bits int, prefix_bits int",
-        ).coalesce(1).write.mode("overwrite").parquet(_zmeta_path(path))
+    IO.meta_write(
+        df.sparkSession,
+        _zmeta_path(path),
+        pa.table(
+            {
+                "cols": pa.array([list(cols)], type=pa.list_(pa.string())),
+                "bits": pa.array([int(bits)], type=pa.int32()),
+                "prefix_bits": pa.array([int(prefix_bits)], type=pa.int32()),
+            }
+        ),
+    )
 
 
 def _read_zmeta(spark, path: str) -> tuple[list[str], int, int]:
-    import os
-
-    from codecdb_queryengine_spark.sources import io as IO
-
-    if not os.path.exists(_zmeta_path(path)):
+    t = IO.meta_read(spark, _zmeta_path(path))
+    if t is None or not t.num_rows:
         raise ValueError(
             f"{path}: no _zmeta artifact — not a zorder_write_partitioned "
             "layout (flat zorder_write layouts have no append path; rebuild "
             "or re-write partitioned)"
         )
-    t = IO.tiny_meta_read(_zmeta_path(path))
-    if t is not None and t.num_rows:
-        return (
-            [str(c) for c in t.column("cols")[0].as_py()],
-            int(t.column("bits")[0].as_py()),
-            int(t.column("prefix_bits")[0].as_py()),
-        )
-    r = spark.read.parquet(_zmeta_path(path)).first()
-    return list(r["cols"]), int(r["bits"]), int(r["prefix_bits"])
+    return (
+        [str(c) for c in t.column("cols")[0].as_py()],
+        int(t.column("bits")[0].as_py()),
+        int(t.column("prefix_bits")[0].as_py()),
+    )
 
 
-# A sort-write's range exchange pays per-task overhead like every layout
-# write (see ann_index._write_parts): size it to the rows it is about to
-# sort instead of inheriting spark.sql.shuffle.partitions.  Row count rides
-# on the bounds aggregate the writers already run (no extra job); the env
-# knob is the local default — at cluster scale the shuffle-partitions cap
-# keeps big tables saturating their executors.
-_SORT_ROWS_PER_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_SORT_ROWS_PER_TASK", "32768"))
-)
-
-
-def _sort_write_parts(spark, n_rows: int) -> int:
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 64
-    return max(1, min(cap, -(-int(n_rows) // _SORT_ROWS_PER_TASK)))
+# Rows per task of a sort-write's range exchange (io.size_tasks); the row
+# count rides on the bounds aggregate the writers already run.
+_SORT_ROWS_PER_TASK = 32768
 
 
 def _check_bounds(df: DataFrame, cols: Sequence[str], bits: int, who: str) -> int:
@@ -211,13 +182,33 @@ def _check_bounds(df: DataFrame, cols: Sequence[str], bits: int, who: str) -> in
     return int(bounds["__n"])
 
 
-def _z_hi_frame(
-    df: DataFrame, cols: Sequence[str], bits: int, prefix_bits: int
-) -> DataFrame:
-    z = z_value([F.col(c) for c in cols], bits)
-    shift = bits * len(cols) - prefix_bits
-    return df.withColumn("__z", z).withColumn(
-        "z_hi", F.shiftright(F.col("__z"), shift)
+def _write_z_partitioned(
+    df: DataFrame,
+    path: str,
+    cols: Sequence[str],
+    bits: int,
+    prefix_bits: int,
+    mode: str,
+    who: str,
+) -> None:
+    """Cluster `df` by the full z and write it into the `z_hi` directories
+    (the top `prefix_bits` of the interleave)."""
+    n_rows = _check_bounds(df, cols, bits, who)
+    zdf = df.withColumn("__z", z_value([F.col(c) for c in cols], bits)).withColumn(
+        "z_hi", F.shiftright(F.col("__z"), bits * len(cols) - prefix_bits)
+    )
+    # range-partition on the full z, not hash on z_hi: tasks get contiguous
+    # z-slices (parallel within a big directory, since z_hi is a z prefix)
+    # and every file covers a disjoint z-rectangle
+    (
+        zdf.repartitionByRange(
+            IO.size_tasks(df.sparkSession, n_rows, _SORT_ROWS_PER_TASK), "__z"
+        )
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode(mode)
+        .partitionBy("z_hi")
+        .parquet(path)
     )
 
 
@@ -233,18 +224,8 @@ def zorder_write_partitioned(
     within) and persist the interleave parameters in `_zmeta`."""
     if not 0 < prefix_bits <= bits * len(cols):
         raise ValueError(f"prefix_bits {prefix_bits} out of (0, bits*n]")
-    n_rows = _check_bounds(df, cols, bits, "zorder_write_partitioned")
-    zdf = _z_hi_frame(df, cols, bits, prefix_bits)
-    # range-partition on the full z, not hash on z_hi: tasks get contiguous
-    # z-slices (parallel within a big directory, since z_hi is a z prefix)
-    # and every file covers a disjoint z-rectangle
-    (
-        zdf.repartitionByRange(_sort_write_parts(df.sparkSession, n_rows), "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .partitionBy("z_hi")
-        .parquet(path)
+    _write_z_partitioned(
+        df, path, cols, bits, prefix_bits, "overwrite", "zorder_write_partitioned"
     )
     _write_zmeta(df, path, cols, bits, prefix_bits)
 
@@ -255,19 +236,7 @@ def zorder_append(df: DataFrame, path: str) -> None:
     interleave parameters and its files land in the z_hi directories it
     spans — no base file is read or rewritten."""
     cols, bits, prefix_bits = _read_zmeta(df.sparkSession, path)
-    n_rows = _check_bounds(df, cols, bits, "zorder_append")
-    zdf = _z_hi_frame(df, cols, bits, prefix_bits)
-    # range-partition on the full z, not hash on z_hi: tasks get contiguous
-    # z-slices (parallel within a big directory, since z_hi is a z prefix)
-    # and every file covers a disjoint z-rectangle
-    (
-        zdf.repartitionByRange(_sort_write_parts(df.sparkSession, n_rows), "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("append")
-        .partitionBy("z_hi")
-        .parquet(path)
-    )
+    _write_z_partitioned(df, path, cols, bits, prefix_bits, "append", "zorder_append")
 
 
 def zorder_maintain(
@@ -282,8 +251,6 @@ def zorder_maintain(
     with the recomputed full z as the in-file sort.  Untouched directories
     are never read and come through byte-identical.  Returns the relative
     dirs rewritten."""
-    from codecdb_queryengine_spark.sources import io as IO
-
     cols, bits, _ = _read_zmeta(spark, path)
     return IO.compact_partitioned_selective(
         spark,

@@ -34,26 +34,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.functions import text as T
+from codecdb_queryengine_spark.session import overlap
+from codecdb_queryengine_spark.sources import io as IO
 
-
-# Bucket-partitioned layout writes pay per-TASK overhead, not per-row, at
-# maintenance scale: repartition("t_bucket") inherits spark.sql.shuffle.
-# partitions (64 locally) and 64 tasks writing ≤32 bucket dirs measured
-# 1.45 s vs 0.63 s at 8 tasks for the identical layout (r11 optimization
-# round, guide §2.2/§6 — fewer, larger write tasks).  ~BUCKETS_PER_TASK dirs
-# per task, capped by the session's shuffle parallelism so a cluster-scale
-# bucket count still saturates its executors.
-_BUCKETS_PER_TASK = max(
-    1, int(os.environ.get("SPARK_GRAFT_BUCKETS_PER_WRITE_TASK", "4"))
-)
-
-
-def _bucket_write_parts(spark: SparkSession, num_buckets: int) -> int:
-    try:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        cap = 64
-    return max(1, min(cap, -(-int(num_buckets) // _BUCKETS_PER_TASK)))
+# Bucket dirs per write task (io.size_tasks): 64 tasks writing ≤32 bucket
+# dirs measured 1.45 s vs 0.63 s at 8 tasks for the identical layout.
+BUCKETS_PER_WRITE_TASK = 4
 
 
 def _bucket_of(term: str, num_buckets: int) -> int:
@@ -73,16 +59,6 @@ def _meta_path(path: str, layout: str) -> str:
     return os.path.join(path, f"meta_{layout}")
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence through the Hadoop FileSystem of the path's scheme, so
-    the check is correct on hdfs:// and s3a:// layouts too, not only on
-    the local filesystem the tests use."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def _write_meta(
     spark: SparkSession, path: str, num_buckets: int, layout: str = "postings"
 ) -> None:
@@ -91,22 +67,13 @@ def _write_meta(
     posting whose bucket doesn't collide — a wrong-answer class, not an
     error — so the layout records the constant and searches read it back
     instead of trusting their caller."""
-    from codecdb_queryengine_spark.sources import io as IO
+    import pyarrow as pa
 
-    meta = _meta_path(path, layout)
-    try:
-        import pyarrow as pa
-
-        done = IO.tiny_meta_write(
-            meta,
-            pa.table({"num_buckets": pa.array([int(num_buckets)], type=pa.int32())}),
-        )
-    except ImportError:  # pragma: no cover — pyarrow ships with pyspark
-        done = False
-    if not done:  # schemed storage: the Spark job is the portable path
-        spark.createDataFrame([(int(num_buckets),)], "num_buckets int").coalesce(
-            1
-        ).write.mode("overwrite").parquet(meta)
+    IO.meta_write(
+        spark,
+        _meta_path(path, layout),
+        pa.table({"num_buckets": pa.array([int(num_buckets)], type=pa.int32())}),
+    )
 
 
 def _read_buckets(
@@ -114,14 +81,12 @@ def _read_buckets(
 ) -> int:
     """Bucket count from the layout's own meta table; `fallback` only for
     pre-meta layouts (neither the per-layout meta nor the legacy shared
-    `<path>/meta` exists).  Existence is checked explicitly so a genuine
-    read error (permissions, corrupt parquet, transient FS failure)
-    PROPAGATES instead of silently reintroducing the wrong-modulus prune
-    the meta table guards against."""
-    from codecdb_queryengine_spark.sources import io as IO
-
+    `<path>/meta` exists).  Only absence falls back: a genuine read error
+    (permissions, corrupt parquet, transient FS failure) PROPAGATES instead
+    of silently reintroducing the wrong-modulus prune the meta table
+    guards against."""
     for meta in (_meta_path(path, layout), os.path.join(path, "meta")):
-        t = IO.tiny_meta_read(meta)
+        t = IO.meta_read(spark, meta)
         if t is not None:
             if not t.num_rows:
                 # An existing meta dir with zero rows is a read anomaly,
@@ -129,8 +94,6 @@ def _read_buckets(
                 # wrong-answer prune, so it must propagate (r11 ADVICE).
                 raise ValueError(f"{meta}: bucket meta table has no rows")
             return int(t.column("num_buckets")[0].as_py())
-        if _fs_exists(spark, meta):
-            return int(spark.read.parquet(meta).first()["num_buckets"])
     return fallback
 
 
@@ -181,7 +144,8 @@ def text_index_build(
     postings = postings_of(docs, text_col, id_col, num_buckets)
     (
         postings.repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            IO.size_tasks(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -253,7 +217,8 @@ def text_index_build_positional(
     (
         positional_postings_of(docs, text_col, id_col, num_buckets)
         .repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            IO.size_tasks(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -327,7 +292,8 @@ def text_index_build_ranked(
     tf = tf_postings_of(docs, text_col, id_col, num_buckets)
     (
         tf.repartition(
-            _bucket_write_parts(docs.sparkSession, num_buckets), "t_bucket"
+            IO.size_tasks(docs.sparkSession, num_buckets, BUCKETS_PER_WRITE_TASK),
+            "t_bucket",
         )
         .write.mode("overwrite")
         .partitionBy("t_bucket")
@@ -595,11 +561,9 @@ def _read_docgen(spark: SparkSession, path: str) -> DataFrame | None:
     an interrupted docgen swap forward first, so a reader after a crash
     sees the committed generation (the manifest is written only after the
     staged table is complete — io.recover_swap's contract)."""
-    from codecdb_queryengine_spark.sources import io as IO
-
     dg = _docgen_path(path)
     IO.recover_swap(dg)
-    if not _fs_exists(spark, dg):
+    if not IO.fs_exists(spark, dg):
         return None
     return spark.read.parquet(dg)
 
@@ -627,7 +591,7 @@ def _live_postings(
         return base
     live = base.join(F.broadcast(dg.select("doc_id")), "doc_id", "left_anti")
     delta_dir = _delta_root(path, layout)
-    if _fs_exists(spark, delta_dir):
+    if IO.fs_exists(spark, delta_dir):
         keep = dg.filter(~F.col("deleted")).select(
             "doc_id", F.col("gen").cast("int").alias("gen")
         )
@@ -656,7 +620,7 @@ def _live_doclens(spark: SparkSession, path: str, cached: bool = False) -> DataF
         return base
     live = base.join(F.broadcast(dg.select("doc_id")), "doc_id", "left_anti")
     delta_dir = _delta_root(path, "doclens")
-    if _fs_exists(spark, delta_dir):
+    if IO.fs_exists(spark, delta_dir):
         keep = dg.filter(~F.col("deleted")).select(
             "doc_id", F.col("gen").cast("int").alias("gen")
         )
@@ -684,10 +648,8 @@ def _promote_docgen(spark: SparkSession, path: str, staging: str) -> None:
     """The atomic docgen commit: journaled swap (or a bare rename when no
     docgen exists yet — the rename itself is the atomic commit).  Must
     run only after every delta of the generation has fully landed."""
-    from codecdb_queryengine_spark.sources import io as IO
-
     dg = _docgen_path(path)
-    if _fs_exists(spark, dg):
+    if IO.fs_exists(spark, dg):
         IO.swap_layout(dg, staging)
     else:
         os.rename(staging, dg)
@@ -768,14 +730,12 @@ def text_index_upsert(
         # exact int64 max from the docgen parquet row-group statistics —
         # no Spark job on local paths; the aggregate remains the schemed-
         # storage fallback
-        from codecdb_queryengine_spark.sources import io as IO
-
         mx = IO.tiny_meta_col_max(_docgen_path(path), "gen")
         new_gen = (
             int(mx) if mx is not None else old_dg.agg(F.max("gen")).first()[0]
         ) + 1
 
-    layouts = [l for l in _LAYOUTS if _fs_exists(spark, os.path.join(path, l))]
+    layouts = [l for l in _LAYOUTS if IO.fs_exists(spark, os.path.join(path, l))]
     if not layouts:
         raise ValueError(f"text_index_upsert: no index layouts at {path}")
     if updates is not None and g["n_upd"]:
@@ -826,16 +786,9 @@ def text_index_upsert(
     # unchanged: nothing reads the staging sibling, so only the promote
     # below (after every delta of the generation has fully landed)
     # publishes the new generation; crash replay is as before.
-    staged: list[str] = []
-    writes.append(lambda: staged.append(_stage_docgen(path, new_dg)))
-    if len(writes) == 1:
-        writes[0]()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(lambda f: f(), writes))
-    _promote_docgen(spark, path, staged[0])
+    writes.append(lambda: _stage_docgen(path, new_dg))
+    staged = overlap(writes, 3)[-1]
+    _promote_docgen(spark, path, staged)
     invalidate_layout(path)
     return new_gen
 
@@ -850,11 +803,9 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
     Returns the layout names folded; no-op (empty list) when never mutated."""
     import shutil
 
-    from codecdb_queryengine_spark.sources import io as IO
-
     if _read_docgen(spark, path) is None:
         return []
-    layouts = [l for l in _LAYOUTS if _fs_exists(spark, os.path.join(path, l))]
+    layouts = [l for l in _LAYOUTS if IO.fs_exists(spark, os.path.join(path, l))]
 
     # Folds are independent whole-layout rewrites (any completion order is
     # crash-safe — a folded base re-derives the same rows under the
@@ -867,7 +818,9 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
         nb = _read_buckets(spark, path, 32, layout=layout)
         tmp = base_path + ".purging"
         (
-            live.repartition(_bucket_write_parts(spark, nb), "t_bucket")
+            live.repartition(
+                IO.size_tasks(spark, nb, BUCKETS_PER_WRITE_TASK), "t_bucket"
+            )
             .write.mode("overwrite")
             .partitionBy("t_bucket")
             .parquet(tmp)
@@ -884,13 +837,7 @@ def text_index_purge(spark: SparkSession, path: str) -> list[str]:
     folds = [lambda l=l: _fold(l) for l in layouts]
     if "postings_tf" in layouts:
         folds.append(_fold_doclens)
-    if len(folds) == 1:
-        folds[0]()
-    elif folds:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(pool.map(lambda f: f(), folds))
+    overlap(folds, 3)
     shutil.rmtree(_docgen_path(path))
     for layout in [*layouts, "doclens"]:
         shutil.rmtree(_delta_root(path, layout), ignore_errors=True)
@@ -928,7 +875,7 @@ def text_index_build_all(
         F.col(id_col).alias("doc_id"), T.tokens(text_col).alias("__toks")
     ).persist()
     bucket = (T.md5_slice32("ti|", F.col("term")) % num_buckets).cast("int")
-    nparts = _bucket_write_parts(spark, num_buckets)
+    nparts = IO.size_tasks(spark, num_buckets, BUCKETS_PER_WRITE_TASK)
 
     # The per-layout writes are INDEPENDENT jobs over the one cached token
     # pass — run 2 in flight (guide §2.6) so one write's task tail
@@ -985,13 +932,7 @@ def text_index_build_all(
     jobs = [builders[l] for l in builders if l in layouts]
     try:
         toks.count()  # materialize the cache once, before the parallel reads
-        if len(jobs) == 1:
-            jobs[0]()
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                list(pool.map(lambda f: f(), jobs))
+        overlap(jobs, 2)
     finally:
         toks.unpersist()
     invalidate_layout(path)

@@ -32,7 +32,7 @@ def stream_to_parquet(
     from one input file is ONE task, and one task serially writing ~K
     partition directories is the measured-slow write shape (3.1 s for a
     ~140-dir layout vs 1.05 s spread over 8 tasks).  Callers size it
-    from their known directory count (io.write_task_count), which keeps
+    from their known directory count (io.size_tasks), which keeps
     the knob scale-adaptive — the stateless shuffle itself is a few
     bytes per row and does not touch the commit-log protocol.
     """

@@ -130,7 +130,7 @@ def _slot_layout(path):
     return out
 
 
-def test_append_into_split_layout_reapplies_cap(spark, sf_dir):
+def test_append_into_split_layout_reapplies_cap(spark, sf_dir, both_meta_paths):
     """Slot-aware append (r7 verdict item 1a): appending into a layout
     built with max_list_rows must route into the existing slots and
     RE-SHARD any list the batch pushes past its cap — the final physical
@@ -142,23 +142,28 @@ def test_append_into_split_layout_reapplies_cap(spark, sf_dir):
         F.col("embedding").alias("c_vec"),
         S.norm(F.col("embedding")).alias("c_norm"),
     )
-    full_p = tempfile.mkdtemp(prefix="ivf_split_full_")
-    incr_p = tempfile.mkdtemp(prefix="ivf_split_incr_")
-    AI.ivf_index_build(emb, full_p, centroids=cents, max_list_rows=16)
-    AI.ivf_index_build(
-        emb.filter(F.col("vec_id") % 2 == 0), incr_p, centroids=cents,
-        max_list_rows=16,
-    )
-    before = _slot_layout(incr_p)
-    AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), incr_p)
-    after = _slot_layout(incr_p)
-    assert after == _slot_layout(full_p)  # cap re-applied, slots re-sharded
-    assert any(len(after[d]) > len(before.get(d, [])) for d in after), (
-        "fixture never exercised the grow path"
-    )
-    a = AI.ivf_index_topk(spark, full_p, _queries(emb), k=5, nprobe=2).collect()
-    b = AI.ivf_index_topk(spark, incr_p, _queries(emb), k=5, nprobe=2).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+
+    def append():
+        full_p = tempfile.mkdtemp(prefix="ivf_split_full_")
+        incr_p = tempfile.mkdtemp(prefix="ivf_split_incr_")
+        AI.ivf_index_build(emb, full_p, centroids=cents, max_list_rows=16)
+        AI.ivf_index_build(
+            emb.filter(F.col("vec_id") % 2 == 0), incr_p, centroids=cents,
+            max_list_rows=16,
+        )
+        before = _slot_layout(incr_p)
+        AI.ivf_index_append(emb.filter(F.col("vec_id") % 2 == 1), incr_p)
+        after = _slot_layout(incr_p)
+        assert after == _slot_layout(full_p)  # cap re-applied, slots re-sharded
+        assert any(len(after[d]) > len(before.get(d, [])) for d in after), (
+            "fixture never exercised the grow path"
+        )
+        a = AI.ivf_index_topk(spark, full_p, _queries(emb), k=5, nprobe=2).collect()
+        b = AI.ivf_index_topk(spark, incr_p, _queries(emb), k=5, nprobe=2).collect()
+        assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+        return after, sorted(map(tuple, b))
+
+    both_meta_paths(append)
 
 
 def test_append_guards_schema_and_missing_meta(spark, sf_dir):
@@ -333,22 +338,25 @@ def test_index_rebuild_overwrites_cleanly(spark, sf_dir):
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
-def test_micro_index_matches_inmemory_lloyd_exact(spark, sf_dir):
+def test_micro_index_matches_inmemory_lloyd_exact(spark, sf_dir, both_meta_paths):
     """The persisted integer index (trained Lloyd centroids) must return
     EXACTLY what the in-memory operator returns — same BIGINT distances,
     same pairs — and its probe scan must dynamic-partition-prune."""
     emb = load_tables(spark, sf_dir)["embeddings"]
     cents = S.kmeans_lloyd_micro(emb, dim=64, k=8, stride=37, iters=2)
-    path = tempfile.mkdtemp(prefix="ivf_lloyd_idx_test_")
-    AI.ivf_index_build_micro(emb, path, cents)
-    df = AI.ivf_index_topk_micro(spark, path, _queries(emb), k=5, nprobe=2)
-    via_index = df.collect()
-    in_memory = S.ivf_topk_micro(emb, _queries(emb), cents, k=5, nprobe=2).collect()
     key = lambda r: (r.q_id, r.rk)  # noqa: E731
-    a = {key(r): (r.n_id, r.l2_micro2) for r in via_index}
-    b = {key(r): (r.n_id, r.l2_micro2) for r in in_memory}
-    assert a == b
-    assert _dpp_live(df)
+
+    def serve():
+        path = tempfile.mkdtemp(prefix="ivf_lloyd_idx_test_")
+        AI.ivf_index_build_micro(emb, path, cents)
+        df = AI.ivf_index_topk_micro(spark, path, _queries(emb), k=5, nprobe=2)
+        assert _dpp_live(df)
+        return {key(r): (r.n_id, r.l2_micro2) for r in df.collect()}
+
+    in_memory = S.ivf_topk_micro(emb, _queries(emb), cents, k=5, nprobe=2).collect()
+    assert both_meta_paths(serve) == {
+        key(r): (r.n_id, r.l2_micro2) for r in in_memory
+    }
 
 
 def test_ivfpq_index_matches_inmemory_exact(spark, sf_dir):

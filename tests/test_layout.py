@@ -96,21 +96,26 @@ def _lifecycle_rows(spark, lo, hi):
     )
 
 
-def test_zorder_partitioned_roundtrip_and_meta(spark, tmp_path):
+def test_zorder_partitioned_roundtrip_and_meta(spark, tmp_path, both_meta_paths):
     from codecdb_queryengine_spark.sources import layout as L
 
-    path = str(tmp_path / "zl")
-    df = _lifecycle_rows(spark, 0, 2000)
-    L.zorder_write_partitioned(df, ["a", "b"], path, bits=6, prefix_bits=3)
-    back = spark.read.parquet(path)
-    assert back.count() == 2000
-    assert {r["k"] for r in back.collect()} == set(range(2000))
-    cols, bits, prefix_bits = L._read_zmeta(spark, path)
-    assert (cols, bits, prefix_bits) == (["a", "b"], 6, 3)
-    # every row sits in the directory its z prefix names
-    z = L.z_value([F.col("a"), F.col("b")], 6)
-    bad = back.filter(F.col("z_hi") != F.shiftright(z, 6 * 2 - 3)).count()
-    assert bad == 0
+
+    def roundtrip():
+        path = os.path.join(tempfile.mkdtemp(dir=tmp_path), "zl")
+        df = _lifecycle_rows(spark, 0, 2000)
+        L.zorder_write_partitioned(df, ["a", "b"], path, bits=6, prefix_bits=3)
+        back = spark.read.parquet(path)
+        assert back.count() == 2000
+        assert {r["k"] for r in back.collect()} == set(range(2000))
+        cols, bits, prefix_bits = L._read_zmeta(spark, path)
+        assert (cols, bits, prefix_bits) == (["a", "b"], 6, 3)
+        # every row sits in the directory its z prefix names
+        z = L.z_value([F.col("a"), F.col("b")], 6)
+        bad = back.filter(F.col("z_hi") != F.shiftright(z, 6 * 2 - 3)).count()
+        assert bad == 0
+        return cols, bits, prefix_bits, sorted(map(tuple, back.collect()))
+
+    both_meta_paths(roundtrip)
 
 
 def test_zorder_append_then_maintain_equals_rebuild(spark, tmp_path):

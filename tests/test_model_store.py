@@ -1,14 +1,21 @@
 """Persisted integer-model artifacts (sources/model_store)."""
 
+import tempfile
+
 import pytest
 
 from codecdb_queryengine_spark.sources import model_store as MS
 
 
-def test_round_trip_is_lossless(spark, tmp_path):
+def test_round_trip_is_lossless(spark, tmp_path, both_meta_paths):
     vecs = {"mean": [1, -2, 3], "comp": [1000000, 0, -999999, 7]}
-    MS.save_model(spark, str(tmp_path), "m1", vecs)
-    assert MS.load_model(spark, str(tmp_path), "m1") == vecs
+
+    def round_trip():
+        path = tempfile.mkdtemp(dir=tmp_path)
+        MS.save_model(spark, path, "m1", vecs)
+        return MS.load_model(spark, path, "m1")
+
+    assert both_meta_paths(round_trip) == vecs
 
 
 def test_overwrite_replaces_previous_version(spark, tmp_path):

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.sources import ann_index as AI
@@ -16,12 +14,13 @@ from codecdb_queryengine_spark.sources import io as IO
 
 def test_write_task_count_bounds(spark):
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    assert IO.write_task_count(spark, 0) == 1
-    assert IO.write_task_count(spark, 1) == 1
+    assert IO.size_tasks(spark, 0, 16) == 1
+    assert IO.size_tasks(spark, 1, 16) == 1
+    assert IO.size_tasks(spark, 17, 16) == 2  # ceil(units / per_task)
     # never exceeds the session's shuffle parallelism (the cluster knob)
-    assert IO.write_task_count(spark, 10**9) == cap
-    # monotone in the directory count
-    assert IO.write_task_count(spark, 64) <= IO.write_task_count(spark, 640)
+    assert IO.size_tasks(spark, 10**9, 16) == cap
+    # monotone in the unit count
+    assert IO.size_tasks(spark, 64, 16) <= IO.size_tasks(spark, 640, 16)
 
 
 def test_slot_plan_matches_ceil_rule():
@@ -30,27 +29,36 @@ def test_slot_plan_matches_ceil_rule():
     assert AI._slot_plan({1: 0}, 16) == [(1, 1)]
 
 
-def test_tiny_meta_roundtrip_both_engines(spark, tmp_path):
-    """pyarrow-written meta must be Spark-readable and vice versa — the
-    local fast path and the schemed-storage fallback share one on-disk
-    format."""
-    pa = pytest.importorskip("pyarrow")
-    p1 = str(tmp_path / "meta_pa")
-    assert IO.tiny_meta_write(
-        p1, pa.table({"num_buckets": pa.array([32], type=pa.int32())})
+def test_tiny_meta_roundtrip_both_engines(spark, tmp_path, monkeypatch):
+    """A metadata table written on either I/O path reads back identically,
+    types included, on both: the pyarrow local path and the Spark path
+    that serves schemed storage share one on-disk format."""
+    import pyarrow as pa
+
+    table = pa.table(
+        {
+            "i32": pa.array([7, None], type=pa.int32()),
+            "i64": pa.array([2**40, -3], type=pa.int64()),
+            "nul": pa.array([None, None], type=pa.int64()),
+            "strs": pa.array([["a", "b"], []], type=pa.list_(pa.string())),
+            "ints": pa.array([[1, -2], None], type=pa.list_(pa.int64())),
+        }
     )
-    assert spark.read.parquet(p1).first()["num_buckets"] == 32
-    p2 = str(tmp_path / "meta_spark")
-    spark.createDataFrame([(7,)], "num_buckets int").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(p2)
-    t = IO.tiny_meta_read(p2)
-    assert t is not None and t.column("num_buckets")[0].as_py() == 7
-    # schemed paths decline, so callers fall back to Spark
-    assert IO.tiny_meta_read("s3a://bucket/meta") is None
-    assert not IO.tiny_meta_write(
-        "hdfs://nn/meta", pa.table({"x": pa.array([1])})
-    )
+
+    def write(path):
+        assert IO.meta_read(spark, path) is None
+        IO.meta_write(spark, path, table)
+        IO.meta_write(spark, path, table)  # a rewrite replaces the table
+
+    by_pyarrow, by_spark = str(tmp_path / "meta_pa"), str(tmp_path / "meta_spark")
+    write(by_pyarrow)
+    with monkeypatch.context() as m:
+        m.setattr(IO, "_local_fs_path", lambda p: None)
+        write(by_spark)
+        for p in (by_pyarrow, by_spark):
+            assert IO.meta_read(spark, p).equals(table)
+    for p in (by_pyarrow, by_spark):
+        assert IO.meta_read(spark, p).equals(table)
 
 
 def test_tiny_meta_col_max_exact(spark, tmp_path):

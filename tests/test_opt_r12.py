@@ -71,6 +71,8 @@ def test_local_fs_path_scheme_handling():
     assert IO._local_fs_path("file:/a/b") == "/a/b"
     assert IO._local_fs_path("file:///a/b") == "/a/b"
     assert IO._local_fs_path("file://localhost/a/b") == "/a/b"
+    # kept literal, as Hadoop's Path keeps it (test_meta_io pins the match)
+    assert IO._local_fs_path("file:/a%20b") == "/a%20b"
     assert IO._local_fs_path("hdfs://nn/a") is None
     assert IO._local_fs_path("s3a://bucket/k") is None
     assert IO._local_fs_path("wasbs://c@acct/k") is None
@@ -80,8 +82,8 @@ def test_read_buckets_zero_row_meta_raises(spark, tmp_path):
     pa = pytest.importorskip("pyarrow")
     path = str(tmp_path / "ti")
     meta = TI._meta_path(path, "postings")
-    assert IO.tiny_meta_write(
-        meta, pa.table({"num_buckets": pa.array([], type=pa.int32())})
+    IO.meta_write(
+        spark, meta, pa.table({"num_buckets": pa.array([], type=pa.int32())})
     )
     with pytest.raises(ValueError, match="no rows"):
         TI._read_buckets(spark, path, 32)

@@ -1,6 +1,7 @@
 """Persisted inverted text index (sources/text_index): build, prune, AND."""
 
 import glob
+import tempfile
 
 from pyspark.sql import functions as F
 
@@ -143,18 +144,23 @@ def test_corpus_search_example_end_to_end(spark, sf_dir, tmp_path):
     assert 1 <= b_read <= 3 and b_disk >= b_read
 
 
-def test_search_uses_layout_bucket_count_not_caller_guess(spark, tmp_path):
+def test_search_uses_layout_bucket_count_not_caller_guess(
+    spark, tmp_path, both_meta_paths
+):
     """Build with 4 buckets, search with a WRONG caller default (32):
     the layout meta must win, or pruning would silently drop postings."""
-    path = str(tmp_path / "ti")
-    TI.text_index_build(_corpus(spark), path, num_buckets=4)
-    got = {
-        r["doc_id"]
-        for r in TI.text_index_search_all(
-            spark, path, ["alpha", "beta"], num_buckets=32
-        ).collect()
-    }
-    assert got == {0, 1}
+
+    def search():
+        path = tempfile.mkdtemp(dir=tmp_path)
+        TI.text_index_build(_corpus(spark), path, num_buckets=4)
+        return {
+            r["doc_id"]
+            for r in TI.text_index_search_all(
+                spark, path, ["alpha", "beta"], num_buckets=32
+            ).collect()
+        }
+
+    assert both_meta_paths(search) == {0, 1}
 
 
 def test_per_layout_meta_do_not_clobber(spark, tmp_path):
