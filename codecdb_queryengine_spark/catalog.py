@@ -11,8 +11,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from codecdb_queryengine_spark.session import _cpus
 
 TABLES = (
     "region",
@@ -78,12 +81,6 @@ _SESSION_CONFS = (
     ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
     ("spark.sql.parquet.filterPushdown", "true"),
     ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-    # Streaming stateful operators take their state-store partition count
-    # from shuffle.partitions at query start and get NO AQE coalescing: a
-    # bare session's default 200 means 200 state stores per stateful stage
-    # (measured 3-4x slowdown on the stream queries at sf0.01).  Batch
-    # queries are insensitive (AQE coalesces either way).
-    ("spark.sql.shuffle.partitions", str(2 * int(os.environ.get("SPARK_GRAFT_CPUS", "32")))),
 )
 
 _conf_applied: set[int] = set()
@@ -93,10 +90,16 @@ def ensure_session_confs(spark: SparkSession) -> None:
     """Apply runtime-settable confs to a caller-provided session (idempotent)."""
     if id(spark) in _conf_applied:
         return
-    for k, v in _SESSION_CONFS:
+    # Streaming stateful operators take their state-store partition count
+    # from shuffle.partitions at query start and get NO AQE coalescing: a
+    # bare session's default 200 means 200 state stores per stateful stage
+    # (measured 3-4x slowdown on the stream queries at sf0.01).  Batch
+    # queries are insensitive (AQE coalesces either way).
+    shuffle = ("spark.sql.shuffle.partitions", str(2 * _cpus()))
+    for k, v in (*_SESSION_CONFS, shuffle):
         try:
             spark.conf.set(k, v)
-        except Exception:
+        except AnalysisException:
             # a conf may be non-settable on some builds; every one above is a
             # runtime SQL conf in Spark 4.x, but never let a tightened conf
             # surface as a table-load failure.

@@ -32,6 +32,7 @@ across rounds (one live copy, not one per round).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -78,7 +79,7 @@ def _release_ckpt(df: DataFrame) -> None:
             path = jvm.org.apache.hadoop.fs.Path(ckpt_file.get())
             fs = path.getFileSystem(sc.hadoopConfiguration())
             fs.delete(path, True)
-    except Exception:  # noqa: BLE001 — cleanup must never fail the query
+    except Py4JError:  # cleanup must never fail the query
         pass
 
 

@@ -20,6 +20,7 @@ import math
 import numpy as np  # noqa: F401
 import pandas as pd  # noqa: F401
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -400,7 +401,7 @@ def _spread(df: DataFrame) -> DataFrame:
     try:
         p = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
         n = df.rdd.getNumPartitions()
-    except Exception:
+    except (ValueError, AnalysisException):
         return df
     return df.repartition(p) if n < p else df
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
 from codecdb_queryengine_spark.operators.encsel import SORT_WINDOW
+from codecdb_queryengine_spark.queries import Gate, oracle_of, ssb, tpch
 
 
 def ext_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1538,80 +1539,40 @@ _SNAPSHOT_DIFF_SQL = """
 """
 
 
-QUERIES = {
-    "ext_rollup": ext_rollup,
-    "ext_zorder": ext_zorder,
-    "ext_zorder_lifecycle": ext_zorder_lifecycle,
-    "ext_profile": ext_profile,
-    "ext_snapshot_diff": ext_snapshot_diff,
-    "ext_corr": ext_corr,
-    "ext_join_skew": ext_join_skew,
-    "ext_grouped_topk": ext_grouped_topk,
-    "ext_equidepth_hist": ext_equidepth_hist,
-    "ext_grouping_sets": ext_grouping_sets,
-    "q2_plan": q2_plan,
-    "q3_plan": q3_plan,
-    "q17_plan": q17_plan,
-    "q21_plan": q21_plan,
-    "q13_plan": q13_plan,
-    "q14_plan": q14_plan,
-    "ssb_q2_1_plan": ssb_q2_1_plan,
-    "ext_cube": ext_cube,
-    "ext_window_funcs": ext_window_funcs,
-    "ext_stats": ext_stats,
-    "ext_stats_approx": ext_stats_approx,
-    "ext_collect": ext_collect,
-    "ext_full_outer": ext_full_outer,
-    "ext_recursive_cte": ext_recursive_cte,
-    "ext_lateral_topk": ext_lateral_topk,
-    "ext_setops": ext_setops,
-    "ext_approx_distinct": ext_approx_distinct,
-    "ext_pivot": ext_pivot,
-    "ext_unpivot": ext_unpivot,
-    "encsel_features": encsel_features,
-    "encsel_decision": encsel_decision,
-    "ext_salted_agg": ext_salted_agg,
-    "ext_salted_join": ext_salted_join,
-}
-
-from codecdb_queryengine_spark.queries.ssb import ORACLE as _SSB_ORACLE  # noqa: E402
-from codecdb_queryengine_spark.queries.tpch import ORACLE as _TPCH_ORACLE  # noqa: E402
-
-ORACLE: dict[str, str] = {
-    "ext_rollup": _ROLLUP_SQL,
-    "ext_zorder": _zorder_sql(),
-    "ext_zorder_lifecycle": _zorder_lifecycle_sql(),
-    "ext_profile": _profile_sql(),
-    "ext_snapshot_diff": _SNAPSHOT_DIFF_SQL,
-    "ext_corr": _CORR_SQL,
-    "ext_join_skew": _JOIN_SKEW_SQL,
-    "ext_grouped_topk": _GROUPED_TOPK_SQL,
-    "ext_equidepth_hist": _EQUIDEPTH_SQL,
-    "ext_grouping_sets": _GROUPING_SETS_SQL,
-    "q2_plan": _TPCH_ORACLE["q2"],
-    "q3_plan": _TPCH_ORACLE["q3"],
-    "q17_plan": _TPCH_ORACLE["q17"],
-    "q21_plan": _TPCH_ORACLE["q21"],
-    "q13_plan": _TPCH_ORACLE["q13"],
-    "q14_plan": _TPCH_ORACLE["q14"],
-    "ssb_q2_1_plan": _SSB_ORACLE["ssb_q2_1"],
-    "ext_cube": _CUBE_SQL,
-    "ext_window_funcs": _WINDOW_SQL,
-    "ext_stats": _STATS_SQL,
-    "ext_collect": _COLLECT_SQL,
-    "ext_full_outer": _FULL_OUTER_SQL,
-    "ext_recursive_cte": _RECURSIVE_SQL,
-    "ext_lateral_topk": _LATERAL_SQL,
-    "ext_setops": _SETOPS_SQL,
-    # sketch estimates are engine-specific, but their CONTRACTS are not:
-    # both approx entries emit exact integers + bound-held booleans (r5)
-    "ext_stats_approx": _STATS_APPROX_SQL,
-    "ext_approx_distinct": _APPROX_DISTINCT_SQL,
-    # (rows-only checks: sketch outputs have no cross-engine oracle).
-    "ext_pivot": _PIVOT_SQL,
-    "ext_unpivot": _UNPIVOT_SQL,
-    "encsel_features": _ENCSEL_SQL,
-    "encsel_decision": _encsel_decision_sql(),
-    "ext_salted_agg": _SALTED_AGG_SQL,
-    "ext_salted_join": _SALTED_JOIN_SQL,
-}
+GATES = [
+    Gate("ext_rollup", ext_rollup, _ROLLUP_SQL),
+    Gate("ext_zorder", ext_zorder, _zorder_sql()),
+    Gate("ext_zorder_lifecycle", ext_zorder_lifecycle, _zorder_lifecycle_sql()),
+    Gate("ext_profile", ext_profile, _profile_sql()),
+    Gate("ext_snapshot_diff", ext_snapshot_diff, _SNAPSHOT_DIFF_SQL),
+    Gate("ext_corr", ext_corr, _CORR_SQL),
+    Gate("ext_join_skew", ext_join_skew, _JOIN_SKEW_SQL),
+    Gate("ext_grouped_topk", ext_grouped_topk, _GROUPED_TOPK_SQL),
+    Gate("ext_equidepth_hist", ext_equidepth_hist, _EQUIDEPTH_SQL),
+    Gate("ext_grouping_sets", ext_grouping_sets, _GROUPING_SETS_SQL),
+    Gate("q2_plan", q2_plan, oracle_of(tpch.GATES, "q2")),
+    Gate("q3_plan", q3_plan, oracle_of(tpch.GATES, "q3")),
+    Gate("q17_plan", q17_plan, oracle_of(tpch.GATES, "q17")),
+    Gate("q21_plan", q21_plan, oracle_of(tpch.GATES, "q21")),
+    Gate("q13_plan", q13_plan, oracle_of(tpch.GATES, "q13")),
+    Gate("q14_plan", q14_plan, oracle_of(tpch.GATES, "q14")),
+    Gate("ssb_q2_1_plan", ssb_q2_1_plan, oracle_of(ssb.GATES, "ssb_q2_1")),
+    Gate("ext_cube", ext_cube, _CUBE_SQL),
+    Gate("ext_window_funcs", ext_window_funcs, _WINDOW_SQL),
+    Gate("ext_stats", ext_stats, _STATS_SQL),
+    # sketch estimates are engine-specific, but their CONTRACTS are not: this
+    # and ext_approx_distinct emit exact integers + bound-held booleans (r5)
+    Gate("ext_stats_approx", ext_stats_approx, _STATS_APPROX_SQL),
+    Gate("ext_collect", ext_collect, _COLLECT_SQL),
+    Gate("ext_full_outer", ext_full_outer, _FULL_OUTER_SQL),
+    Gate("ext_recursive_cte", ext_recursive_cte, _RECURSIVE_SQL),
+    Gate("ext_lateral_topk", ext_lateral_topk, _LATERAL_SQL),
+    Gate("ext_setops", ext_setops, _SETOPS_SQL),
+    Gate("ext_approx_distinct", ext_approx_distinct, _APPROX_DISTINCT_SQL),
+    Gate("ext_pivot", ext_pivot, _PIVOT_SQL),
+    Gate("ext_unpivot", ext_unpivot, _UNPIVOT_SQL),
+    Gate("encsel_features", encsel_features, _ENCSEL_SQL),
+    Gate("encsel_decision", encsel_decision, _encsel_decision_sql()),
+    Gate("ext_salted_agg", ext_salted_agg, _SALTED_AGG_SQL),
+    Gate("ext_salted_join", ext_salted_join, _SALTED_JOIN_SQL),
+]

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
+from codecdb_queryengine_spark.queries import Gate
 
 
 def _money_sum(term, alias: str):
@@ -322,60 +323,44 @@ def q4_3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {
-    "ssb_q1_1": q1_1,
-    "ssb_q1_2": q1_2,
-    "ssb_q1_3": q1_3,
-    "ssb_q2_1": q2_1,
-    "ssb_q2_2": q2_2,
-    "ssb_q2_3": q2_3,
-    "ssb_q3_1": q3_1,
-    "ssb_q3_2": q3_2,
-    "ssb_q3_3": q3_3,
-    "ssb_q3_4": q3_4,
-    "ssb_q4_1": q4_1,
-    "ssb_q4_2": q4_2,
-    "ssb_q4_3": q4_3,
-}
-
-ORACLE: dict[str, str] = {
-    "ssb_q1_1": f"""
+GATES = [
+    Gate("ssb_q1_1", q1_1, f"""
         SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_year = 1996 AND l_discount BETWEEN 0.01 AND 0.03 AND l_quantity < 25
-    """,
-    "ssb_q1_2": f"""
+    """),
+    Gate("ssb_q1_2", q1_2, f"""
         SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_yearmonthnum = 199704 AND l_discount BETWEEN 0.04 AND 0.06
           AND l_quantity BETWEEN 26 AND 35
-    """,
-    "ssb_q1_3": f"""
+    """),
+    Gate("ssb_q1_3", q1_3, f"""
         SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM ({_SQL_FACT}) f
         WHERE d_weeknuminyear = 6 AND d_year = 1997
           AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity BETWEEN 26 AND 35
-    """,
-    "ssb_q2_1": _sql_q2("p_type = 'ECONOMY'", "AMERICA"),
-    "ssb_q2_2": _sql_q2("p_brand BETWEEN 'Brand#10' AND 'Brand#19'", "ASIA"),
-    "ssb_q2_3": _sql_q2("p_brand = 'Brand#23'", "EUROPE"),
-    "ssb_q3_1": _sql_q3(
+    """),
+    Gate("ssb_q2_1", q2_1, _sql_q2("p_type = 'ECONOMY'", "AMERICA")),
+    Gate("ssb_q2_2", q2_2, _sql_q2("p_brand BETWEEN 'Brand#10' AND 'Brand#19'", "ASIA")),
+    Gate("ssb_q2_3", q2_3, _sql_q2("p_brand = 'Brand#23'", "EUROPE")),
+    Gate("ssb_q3_1", q3_1, _sql_q3(
         "c_region = 'ASIA'", "s_region = 'ASIA'", "d_year BETWEEN 1995 AND 1997"
-    ),
-    "ssb_q3_2": _sql_q3(
+    )),
+    Gate("ssb_q3_2", q3_2, _sql_q3(
         "c_region = 'AMERICA'", "s_region = 'AMERICA'", "d_year BETWEEN 1996 AND 1998"
-    ),
-    "ssb_q3_3": _sql_q3(
+    )),
+    Gate("ssb_q3_3", q3_3, _sql_q3(
         "c_nation IN ('NATION_1','NATION_5')",
         "s_nation IN ('NATION_1','NATION_5')",
         "d_year BETWEEN 1995 AND 1998",
-    ),
-    "ssb_q3_4": _sql_q3(
+    )),
+    Gate("ssb_q3_4", q3_4, _sql_q3(
         "c_nation IN ('NATION_1','NATION_5')",
         "s_nation IN ('NATION_1','NATION_5')",
         "d_yearmonthnum = 199712",
-    ),
-    "ssb_q4_1": f"""
+    )),
+    Gate("ssb_q4_1", q4_1, f"""
         SELECT d_year, c_nation, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
@@ -384,8 +369,8 @@ ORACLE: dict[str, str] = {
           AND l_suppkey IN (SELECT s_suppkey FROM ({_SQL_SUPP}) WHERE s_region = 'AMERICA')
         GROUP BY d_year, c_nation
         ORDER BY d_year, c_nation
-    """,
-    "ssb_q4_2": f"""
+    """),
+    Gate("ssb_q4_2", q4_2, f"""
         SELECT d_year, s_nation, p_type, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
@@ -395,8 +380,8 @@ ORACLE: dict[str, str] = {
           AND o_custkey IN (SELECT c_custkey FROM ({_SQL_CUST}) WHERE c_region = 'AMERICA')
         GROUP BY d_year, s_nation, p_type
         ORDER BY d_year, s_nation, p_type
-    """,
-    "ssb_q4_3": f"""
+    """),
+    Gate("ssb_q4_3", q4_3, f"""
         SELECT d_year, p_brand, CAST(sum(CAST({_SQL_PROFIT} AS DECIMAL(18,4))) AS DOUBLE) AS profit
         FROM ({_SQL_FACT}) f
         JOIN part ON l_partkey = p_partkey
@@ -404,5 +389,5 @@ ORACLE: dict[str, str] = {
           AND l_suppkey IN (SELECT s_suppkey FROM ({_SQL_SUPP}) WHERE s_nation = 'NATION_2')
         GROUP BY d_year, p_brand
         ORDER BY d_year, p_brand
-    """,
-}
+    """),
+]

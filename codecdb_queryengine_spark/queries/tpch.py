@@ -11,7 +11,7 @@ Adaptation notes (driver testdata lacks partsupp, l_commitdate,
 l_receiptdate, l_shipmode, comments and phone columns — see FIXTURES.md):
 every query keeps the *operator shape* of its reference counterpart
 (filter / semi-join / outer-join / exists / correlated-agg / arg-max / top-k)
-but substitutes available columns.  Each entry in ORACLE is the equivalent
+but substitutes available columns.  Each gate's oracle is the equivalent
 ANSI SQL run by DuckDB on the same parquet for the correctness gate; aliases
 match column-for-column.
 
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from codecdb_queryengine_spark.catalog import load_tables
+from codecdb_queryengine_spark.queries import Gate, oracle_of
 
 
 def _ts(s: str):
@@ -746,13 +747,8 @@ def q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {f"q{i}": globals()[f"q{i}"] for i in range(1, 23)}
-QUERIES["q3_bucketed"] = q3_bucketed
-QUERIES["q18_bucketed"] = q18_bucketed
-
-
-ORACLE: dict[str, str] = {
-    "q1": """
+GATES = [
+    Gate("q1", q1, """
         SELECT l_returnflag, l_linestatus,
                sum(l_quantity) AS sum_qty,
                sum(l_extendedprice) AS sum_base_price,
@@ -766,8 +762,8 @@ ORACLE: dict[str, str] = {
         WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus
-    """,
-    "q2": """
+    """),
+    Gate("q2", q2, """
         SELECT n_name, s_name, s_acctbal FROM (
             SELECT n_name, s_name, s_acctbal,
                    rank() OVER (PARTITION BY n_nationkey ORDER BY s_acctbal) AS rk
@@ -775,8 +771,8 @@ ORACLE: dict[str, str] = {
             WHERE s_nationkey = n_nationkey AND n_regionkey = r_regionkey
               AND r_name = 'EUROPE')
         WHERE rk = 1 ORDER BY n_name, s_name
-    """,
-    "q3": """
+    """),
+    Gate("q3", q3, """
         SELECT l_orderkey,
                CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
                o_orderdate, o_orderpriority
@@ -788,8 +784,8 @@ ORACLE: dict[str, str] = {
         GROUP BY l_orderkey, o_orderdate, o_orderpriority
         ORDER BY revenue DESC, o_orderdate, l_orderkey
         LIMIT 10
-    """,
-    "q4": """
+    """),
+    Gate("q4", q4, """
         SELECT o_orderpriority, count(*) AS order_count
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -798,8 +794,8 @@ ORACLE: dict[str, str] = {
                       WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-    """,
-    "q5": """
+    """),
+    Gate("q5", q5, """
         SELECT n_name, CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM customer, orders, lineitem, supplier, nation, region
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -810,16 +806,16 @@ ORACLE: dict[str, str] = {
           AND o_orderdate < TIMESTAMP '1997-01-01'
         GROUP BY n_name
         ORDER BY revenue DESC
-    """,
-    "q6": """
+    """),
+    Gate("q6", q6, """
         SELECT sum(l_extendedprice * l_discount) AS revenue
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1996-01-01'
           AND l_shipdate < TIMESTAMP '1997-01-01'
           AND l_discount >= 0.05 AND l_discount <= 0.07
           AND l_quantity < 24
-    """,
-    "q7": """
+    """),
+    Gate("q7", q7, """
         SELECT supp_nation, cust_nation, l_year,
                CAST(sum(CAST(volume AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -834,8 +830,8 @@ ORACLE: dict[str, str] = {
                 AND l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31')
         GROUP BY supp_nation, cust_nation, l_year
         ORDER BY supp_nation, cust_nation, l_year
-    """,
-    "q8": """
+    """),
+    Gate("q8", q8, """
         SELECT o_year,
                sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END) / sum(volume) AS mkt_share
         FROM (SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -850,8 +846,8 @@ ORACLE: dict[str, str] = {
                 AND p_type = 'ECONOMY')
         GROUP BY o_year
         ORDER BY o_year
-    """,
-    "q9": """
+    """),
+    Gate("q9", q9, """
         SELECT nation, o_year, CAST(sum(CAST(amount AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
         FROM (SELECT n_name AS nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
                      l_extendedprice * (1 - l_discount) AS amount
@@ -861,8 +857,8 @@ ORACLE: dict[str, str] = {
                 AND p_name LIKE '%red%')
         GROUP BY nation, o_year
         ORDER BY nation, o_year DESC
-    """,
-    "q10": """
+    """),
+    Gate("q10", q10, """
         SELECT c_custkey, c_name,
                CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
                c_acctbal, n_name
@@ -874,8 +870,8 @@ ORACLE: dict[str, str] = {
         GROUP BY c_custkey, c_name, c_acctbal, n_name
         ORDER BY revenue DESC, c_custkey
         LIMIT 20
-    """,
-    "q11": """
+    """),
+    Gate("q11", q11, """
         SELECT l_partkey, sum(l_extendedprice * l_quantity) AS part_value
         FROM lineitem, supplier, nation
         WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
@@ -887,8 +883,8 @@ ORACLE: dict[str, str] = {
             WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey
               AND n_name = 'NATION_5')
         ORDER BY part_value DESC, l_partkey
-    """,
-    "q12": """
+    """),
+    Gate("q12", q12, """
         SELECT l_linestatus,
                count(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END) AS high_line_count,
                count(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 END) AS low_line_count
@@ -899,8 +895,8 @@ ORACLE: dict[str, str] = {
           AND l_shipdate < TIMESTAMP '1997-01-01'
         GROUP BY l_linestatus
         ORDER BY l_linestatus
-    """,
-    "q13": """
+    """),
+    Gate("q13", q13, """
         SELECT c_count, count(*) AS custdist
         FROM (SELECT c_custkey, count(o_orderkey) AS c_count
               FROM customer LEFT OUTER JOIN orders
@@ -908,8 +904,8 @@ ORACLE: dict[str, str] = {
               GROUP BY c_custkey)
         GROUP BY c_count
         ORDER BY custdist DESC, c_count DESC
-    """,
-    "q14": """
+    """),
+    Gate("q14", q14, """
         SELECT 100.00 * sum(CASE WHEN p_type LIKE 'PROMO%'
                                  THEN l_extendedprice * (1 - l_discount)
                                  ELSE 0 END)
@@ -918,8 +914,8 @@ ORACLE: dict[str, str] = {
         WHERE l_partkey = p_partkey
           AND l_shipdate >= TIMESTAMP '1996-09-01'
           AND l_shipdate < TIMESTAMP '1996-10-01'
-    """,
-    "q15": """
+    """),
+    Gate("q15", q15, """
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
                    sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -932,8 +928,8 @@ ORACLE: dict[str, str] = {
         WHERE s_suppkey = supplier_no
           AND total_revenue = (SELECT max(total_revenue) FROM revenue)
         ORDER BY s_suppkey
-    """,
-    "q16": """
+    """),
+    Gate("q16", q16, """
         SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
         FROM lineitem, part
         WHERE p_partkey = l_partkey
@@ -943,15 +939,15 @@ ORACLE: dict[str, str] = {
           AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 500.0)
         GROUP BY p_brand, p_type, p_size
         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
-    """,
-    "q17": """
+    """),
+    Gate("q17", q17, """
         SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0 AS avg_yearly
         FROM lineitem, part
         WHERE p_partkey = l_partkey AND p_brand = 'Brand#3'
           AND l_quantity < (SELECT 0.2 * avg(l_quantity)
                             FROM lineitem l2 WHERE l2.l_partkey = p_partkey)
-    """,
-    "q18": """
+    """),
+    Gate("q18", q18, """
         SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
                sum(l_quantity) AS sum_qty
         FROM customer, orders, lineitem
@@ -961,8 +957,8 @@ ORACLE: dict[str, str] = {
         GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
         ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
         LIMIT 100
-    """,
-    "q19": """
+    """),
+    Gate("q19", q19, """
         SELECT CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
         FROM lineitem, part
         WHERE p_partkey = l_partkey
@@ -972,8 +968,8 @@ ORACLE: dict[str, str] = {
                 AND l_quantity BETWEEN 10 AND 20)
             OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 15
                 AND l_quantity BETWEEN 20 AND 30))
-    """,
-    "q20": """
+    """),
+    Gate("q20", q20, """
         SELECT s_name, s_acctbal
         FROM supplier
         WHERE s_suppkey IN (
@@ -986,8 +982,8 @@ ORACLE: dict[str, str] = {
           AND s_nationkey IN (SELECT n_nationkey FROM nation, region
                               WHERE n_regionkey = r_regionkey AND r_name = 'ASIA')
         ORDER BY s_name
-    """,
-    "q21": """
+    """),
+    Gate("q21", q21, """
         SELECT s_name, count(*) AS numwait
         FROM supplier, lineitem l1, orders, nation
         WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey
@@ -1007,8 +1003,8 @@ ORACLE: dict[str, str] = {
         GROUP BY s_name
         ORDER BY numwait DESC, s_name
         LIMIT 100
-    """,
-    "q22": """
+    """),
+    Gate("q22", q22, """
         SELECT cntrycode, count(*) AS numcust,
                CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         FROM (SELECT c_nationkey AS cntrycode, c_acctbal
@@ -1022,10 +1018,12 @@ ORACLE: dict[str, str] = {
                                   AND o_orderdate >= TIMESTAMP '2000-01-01'))
         GROUP BY cntrycode
         ORDER BY cntrycode
-    """,
-}
+    """),
+]
 
-# Same result contract as q3 — the bucketed layout must change the plan
+# Same result contract as q3/q18 — the bucketed layout must change the plan
 # (no shuffle Exchange; pinned by scripts/explain_audit.py), never the rows.
-ORACLE["q3_bucketed"] = ORACLE["q3"]
-ORACLE["q18_bucketed"] = ORACLE["q18"]
+GATES += [
+    Gate("q3_bucketed", q3_bucketed, oracle_of(GATES, "q3")),
+    Gate("q18_bucketed", q18_bucketed, oracle_of(GATES, "q18")),
+]

@@ -29,10 +29,14 @@ from pyspark.sql import SparkSession
 
 
 def _cpus() -> int:
+    """$SPARK_GRAFT_CPUS, else the number of CPUs this process may run on."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return len(os.sched_getaffinity(0))
     try:
-        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        return max(1, int(raw))
     except ValueError:
-        return 32
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer, got {raw!r}") from None
 
 
 def get_spark(app_name: str = "codecdb-queryengine-spark", **extra_conf: str) -> SparkSession:

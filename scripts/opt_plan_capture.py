@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
-"""Capture .explain("formatted") for the r11-optimization-touched queries
-into plans/r11/<name>_<tag>.txt (tag = before|after).
+"""Capture .explain("formatted") for named queries into
+<out_dir>/<name>_<tag>.txt.
 
-Usage: python scripts/opt_plan_capture.py <tag> [repo_root] [sf_dir] [name ...]
+Usage: python scripts/opt_plan_capture.py <tag> <out_dir> <repo_root> <sf_dir> <name> [name ...]
 
-Run with tag=after from the optimized checkout and tag=before from a
-worktree of the pre-optimization commit (pass that worktree as repo_root),
-so the judge can diff the committed plans.  Multi-action lifecycle gates
-explain their RETURNED (serve) plan — the write-side changes are evidenced
-by the phase-probe numbers and layout file inventories in
-OPTIMIZATION_r11.md.
+Run with tag=after on the optimized checkout and tag=before with repo_root
+set to a checkout of the pre-optimization commit, so the committed plans
+can be diffed (plans/r11 and plans/r12 were captured this way).  Each
+query is collected first, so the FINAL adaptive plan is captured.
+Multi-action lifecycle gates explain their RETURNED (serve) plan only; the
+write-side changes need phase timings and layout file inventories.
 """
 
 from __future__ import annotations
@@ -19,45 +19,22 @@ import io
 import os
 import sys
 
-TAG = sys.argv[1] if len(sys.argv) > 1 else "after"
-ROOT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo"
-SF = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-ONLY = sys.argv[4:]
+if len(sys.argv) < 6:
+    sys.exit(__doc__)
+TAG, OUT_DIR, ROOT, SF = sys.argv[1:5]
+NAMES = sys.argv[5:]
 
 sys.path.insert(0, ROOT)
-
-QUERIES = [
-    # changed plans
-    "docs_dsir_sample",
-    # write-path-optimized lifecycle gates (serve plan pinned unchanged)
-    "sim_ann_ivf_upserted",
-    "sim_ann_ivfpq_upserted",
-    "sim_ann_ivf_indexed",
-    "sim_ann_ivf_indexed_append",
-    "docs_search_upserted",
-    "docs_search_purged",
-    "ext_zorder_lifecycle",
-    "emb_stream_mutations",
-    "emb_stream_pq_mutations",
-    "docs_stream_mutations",
-    "dedup_embedding",
-    "dedup_report",
-    "docs_dedup_substrings",
-    "graph_pagerank",
-    "dedup_semantic",
-]
 
 
 def main() -> None:
     import __spark_entry__ as entry_mod
     from codecdb_queryengine_spark.session import get_spark
 
-    out_dir = os.path.join("/root/repo", "plans", "r11")
-    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark(f"plan-capture-{TAG}")
     qs = entry_mod.queries()
-    names = ONLY or QUERIES
-    for name in names:
+    for name in NAMES:
         fn = qs[name]
         df = fn(spark, SF)
         df.collect()  # execute so AQE's FINAL plan (ReusedExchange,
@@ -65,7 +42,7 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        with open(os.path.join(out_dir, f"{name}_{TAG}.txt"), "w") as fh:
+        with open(os.path.join(OUT_DIR, f"{name}_{TAG}.txt"), "w") as fh:
             fh.write(buf.getvalue())
         print(f"captured {name}_{TAG}", flush=True)
 

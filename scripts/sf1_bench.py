@@ -264,7 +264,7 @@ def main() -> int:
     per_query: dict[str, float] = {}
     pipe_query: dict[str, float] = {}
     if families in ("relational", "all"):
-        queries = {**tpch.QUERIES, **ssb.QUERIES}
+        queries = {g.name: g.fn for g in tpch.GATES + ssb.GATES}
         queries["q6"](spark, OUT).collect()  # warm session + IO, untimed
         _time_set(spark, queries, per_query)
     if families in ("pipeline", "all"):
@@ -277,7 +277,7 @@ def main() -> int:
             n: (
                 _dedup_embedding_fixed4
                 if n == "dedup_embedding_fixed4"
-                else pipeline.QUERIES[n]
+                else getattr(pipeline, n)
             )
             for n in PIPELINE
         }

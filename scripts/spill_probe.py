@@ -104,7 +104,7 @@ def _worker(heap: str, fraction: str, parts: str) -> int:
 
     from codecdb_queryengine_spark.queries import pipeline, tpch
 
-    qmap = {**tpch.QUERIES, **pipeline.QUERIES}
+    qmap = {g.name: g.fn for g in tpch.GATES + pipeline.GATES}
     sf1 = os.environ.get("SF1_DIR", "/tmp/sf1_data")
     # warm the IO + python worker path untimed
     qmap["q6"](spark, sf1).collect()

@@ -331,7 +331,7 @@ def test_recall_gates_pin_quality_values(spark, sf_dir):
     means = {}
     per_q = {}
     for name, want in expected.items():
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = getattr(P, name)(spark, sf_dir).collect()
         got = {r.q_id: (r.hits, r.recall_at_10) for r in rows}
         assert got == want, f"{name}: {got}"
         means[name] = sum(v[1] for v in got.values()) / len(got)
@@ -367,7 +367,7 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
     }
     got = {}
     for name, want in expected.items():
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = getattr(P, name)(spark, sf_dir).collect()
         got[name] = {r.q_id: (r.hits, r.recall_at_10) for r in rows}
         assert got[name] == want, f"{name}: {got[name]}"
 
@@ -375,7 +375,7 @@ def test_two_stage_rerank_flat_tiers(spark, sf_dir):
     # hits, lsh 4->7 at sf0.001)
     single = {}
     for name in ("sim_ann_recall_ivf", "sim_ann_recall_lsh"):
-        rows = P.QUERIES[name](spark, sf_dir).collect()
+        rows = getattr(P, name)(spark, sf_dir).collect()
         single[name] = sum(r.hits for r in rows)
     assert sum(h for h, _ in got["sim_ann_recall_ivf_reranked"].values()) > \
         single["sim_ann_recall_ivf"]
@@ -420,7 +420,7 @@ def test_ivfpq_operating_curve_pinned(spark, sf_dir):
     honest ADC artifact the curve exists to expose."""
     from codecdb_queryengine_spark.queries import pipeline as P
 
-    rows = P.QUERIES["sim_ann_ivfpq_curve"](spark, sf_dir).collect()
+    rows = P.sim_ann_ivfpq_curve(spark, sf_dir).collect()
     got = {(r.nprobe, r.r_shortlist): (r.hits, r.recall_at_10, r.rows_read)
            for r in rows}
     assert got == {

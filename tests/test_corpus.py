@@ -357,7 +357,7 @@ def test_dsir_gate_enriches_target_domain(spark, sf_dir):
     domain even through the Gumbel noise."""
     from codecdb_queryengine_spark.queries import pipeline as P
 
-    rows = P.QUERIES["docs_dsir_sample"](spark, sf_dir).collect()
+    rows = P.docs_dsir_sample(spark, sf_dir).collect()
     assert len(rows) == 50
     n_target = sum(1 for r in rows if r.is_target)
     assert n_target == 34

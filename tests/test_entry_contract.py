@@ -3,6 +3,8 @@ driver's correctness-gate window — keep the curated cross-section stable —
 and every oracle key must have a matching query."""
 
 import __spark_entry__ as entry
+from codecdb_queryengine_spark.queries import Gate
+from codecdb_queryengine_spark.queries.pipeline import _ensure_layout
 
 
 def test_driver_window_is_the_curated_cross_section():
@@ -44,90 +46,117 @@ def test_bench_skip_only_hides_twins():
 
 
 def test_no_duplicate_registry_keys_in_module_sources():
-    """A dict literal silently keeps only the LAST entry for a duplicated
-    key, so registering two different queries under one name — or defining
-    two functions with the same name in one module — ships whichever comes
-    later with no error (this nearly happened with docs_sample_stratified).
-    Scan each query module's source for duplicate dict keys and duplicate
-    top-level def names."""
+    """Defining two functions with the same name in one module silently
+    ships whichever comes later (this nearly happened with
+    docs_sample_stratified).  Scan each query module's source for duplicate
+    top-level def names; duplicate gate names raise at import."""
     import re
     from pathlib import Path
 
     qdir = Path("codecdb_queryengine_spark/queries")
     for mod in sorted(qdir.glob("*.py")):
-        src = mod.read_text()
-        defs = re.findall(r"^def (\w+)\(", src, re.M)
+        defs = re.findall(r"^def (\w+)\(", mod.read_text(), re.M)
         dupes = {d for d in defs if defs.count(d) > 1}
         assert not dupes, f"{mod.name}: duplicate top-level defs {sorted(dupes)}"
-        for dict_name in ("QUERIES", "ORACLE"):
-            m = re.search(rf"^{dict_name}[^=]*= {{(.*?)^}}", src, re.M | re.S)
-            if not m:
-                continue
-            keys = re.findall(r'^\s{4}"([^"]+)":', m.group(1), re.M)
-            kd = {k for k in keys if keys.count(k) > 1}
-            assert not kd, f"{mod.name} {dict_name}: duplicate keys {sorted(kd)}"
 
 
-def test_bench_lifecycle_set_matches_scratch_layout_gates():
-    """BENCH_LIFECYCLE (the bench's isolated last-run family, r8 verdict
-    item 4) must be EXACTLY the gates whose body builds a persisted
-    scratch layout (_scratch_dir) — regenerated from the query sources so
-    the set can't drift as gates are added or retired."""
-    import os
+def _gates_whose_source_calls(*callees: str) -> set[str]:
+    """Registered gates whose top-level body text calls any of ``callees``:
+    a scan of the query sources, independent of the code-object walk that
+    derives the bench sets."""
     import re
+    from pathlib import Path
 
-    qdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "codecdb_queryengine_spark",
-        "queries",
-    )
-    derived = set()
+    qdir = Path(__file__).resolve().parent.parent / "codecdb_queryengine_spark" / "queries"
+    found = set()
     for mod in ("pipeline.py", "extensions.py"):
-        src = open(os.path.join(qdir, mod)).read()
         for fname, body in re.findall(
             r"def (\w+)\(spark: SparkSession, sf_dir: str\) -> DataFrame:"
             r"(.*?)(?=\ndef |\Z)",
-            src,
+            (qdir / mod).read_text(),
             re.S,
         ):
-            if "_scratch_dir(" in body or "_ensure_layout(" in body:
-                derived.add(fname)
-    registered = derived & set(entry.queries())
-    assert entry.BENCH_LIFECYCLE == registered, (
-        sorted(entry.BENCH_LIFECYCLE - registered),
-        sorted(registered - entry.BENCH_LIFECYCLE),
+            if any(f"{c}(" in body for c in callees):
+                found.add(fname)
+    return found & set(entry.queries())
+
+
+def test_bench_lifecycle_set_matches_scratch_layout_gates():
+    """BENCH_LIFECYCLE (the bench's isolated last-run family) must be
+    EXACTLY the gates whose body builds a persisted scratch layout, as a
+    text scan of the query sources finds them."""
+    scanned = _gates_whose_source_calls("_scratch_dir", "_ensure_layout")
+    assert entry.BENCH_LIFECYCLE == scanned, (
+        sorted(entry.BENCH_LIFECYCLE - scanned),
+        sorted(scanned - entry.BENCH_LIFECYCLE),
     )
 
 
 def test_bench_prebuilt_set_matches_ensure_layout_gates():
-    """BENCH_PREBUILT (r9 verdict item 3's pure-serve fixture family) must
-    be EXACTLY the gates whose body routes its base build through
-    pipeline._ensure_layout — regenerated from the query sources so the
-    set can't drift — and every such gate must also be in
+    """BENCH_PREBUILT (the pure-serve fixture family) must be EXACTLY the
+    gates whose body routes its base build through
+    pipeline._ensure_layout, and every such gate must also be in
     BENCH_LIFECYCLE (a prebuilt gate still builds a scratch layout when
     the fixture is off)."""
-    import os
-    import re
-
-    qdir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "codecdb_queryengine_spark",
-        "queries",
-    )
-    derived = set()
-    for mod in ("pipeline.py", "extensions.py"):
-        src = open(os.path.join(qdir, mod)).read()
-        for fname, body in re.findall(
-            r"def (\w+)\(spark: SparkSession, sf_dir: str\) -> DataFrame:"
-            r"(.*?)(?=\ndef |\Z)",
-            src,
-            re.S,
-        ):
-            if "_ensure_layout(" in body:
-                derived.add(fname)
-    registered = derived & set(entry.queries())
-    assert entry.BENCH_PREBUILT == registered, (
-        sorted(entry.BENCH_PREBUILT - registered),
-        sorted(registered - entry.BENCH_PREBUILT),
+    scanned = _gates_whose_source_calls("_ensure_layout")
+    assert entry.BENCH_PREBUILT == scanned, (
+        sorted(entry.BENCH_PREBUILT - scanned),
+        sorted(scanned - entry.BENCH_PREBUILT),
     )
     assert entry.BENCH_PREBUILT <= entry.BENCH_LIFECYCLE
+
+
+# sha256 of every gate's name, oracle SQL and bench-set membership, in
+# queries() order.  A change to any of them must update this on purpose.
+REGISTRY_DIGEST = "a80de1638cae26d98c25f714364cca4909bf7907920318f8c795596e26070bb3"
+
+
+def test_registry_digest_is_pinned():
+    import hashlib
+    import json
+
+    oracles = entry.oracle_sql()
+    rows = [
+        [
+            n,
+            oracles[n],
+            n in entry.BENCH_SKIP,
+            n in entry.BENCH_LIFECYCLE,
+            n in entry.BENCH_PREBUILT,
+        ]
+        for n in entry.queries()
+    ]
+    assert hashlib.sha256(json.dumps(rows).encode()).hexdigest() == REGISTRY_DIGEST
+    assert entry.BENCH_PREBUILT <= entry.BENCH_LIFECYCLE
+
+
+def test_duplicate_gate_name_raises():
+    """A second gate under a taken name would shadow the first."""
+    import pytest
+
+    from codecdb_queryengine_spark.queries import tpch
+
+    twin = Gate("q6", tpch.q1, "SELECT 1")
+    with pytest.raises(ValueError, match="q6"):
+        entry._by_name(tpch.GATES + [twin])
+
+
+def test_nested_ensure_layout_closure_is_lifecycle_and_prebuilt():
+    """The bench sets are read off the gate's code, closures included: a
+    gate whose base build sits in a nested function still counts."""
+
+    def synthetic(spark, sf_dir):
+        def serve():
+            return _ensure_layout("synthetic", sf_dir, "base", lambda path: None)
+
+        return serve()
+
+    def plain(spark, sf_dir):
+        return spark.range(1)
+
+    skip, lifecycle, prebuilt = entry._bench_sets(
+        [Gate("synthetic", synthetic, "SELECT 1"), Gate("plain", plain, "SELECT 1", timed=False)]
+    )
+    assert skip == {"plain"}
+    assert lifecycle == {"synthetic"}
+    assert prebuilt == {"synthetic"}

@@ -205,7 +205,7 @@ def test_prebuilt_layout_fixture_reuses_base_and_serves_identically(
     from codecdb_queryengine_spark.queries import pipeline as P
 
     monkeypatch.setenv("SPARK_GRAFT_PREBUILT_LAYOUTS", "1")
-    a = P.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
+    a = P.sim_ann_ivf_indexed(spark, sf_dir).collect()
     path = P._scratch_dir("ivf_index", sf_dir)
     assert os.path.exists(os.path.join(path, "_prebuilt_flat.ok"))
 
@@ -218,6 +218,6 @@ def test_prebuilt_layout_fixture_reuses_base_and_serves_identically(
         return out
 
     before = snapshot()
-    b = P.QUERIES["sim_ann_ivf_indexed"](spark, sf_dir).collect()
+    b = P.sim_ann_ivf_indexed(spark, sf_dir).collect()
     assert snapshot() == before, "second invocation rewrote the layout"
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))

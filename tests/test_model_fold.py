@@ -118,6 +118,13 @@ def test_spread_noop_when_partitioned(spark, sf_dir):
     assert S._spread(narrow).rdd.getNumPartitions() == p
 
 
+def test_spread_returns_streaming_frame_unchanged(spark):
+    """A streaming frame cannot be inspected through .rdd: _spread hands it
+    back as it is instead of failing."""
+    stream = spark.readStream.format("rate").load()
+    assert S._spread(stream) is stream
+
+
 def test_assign_sql_norm_literal_is_ieee_identical(spark, sf_dir):
     """The driver-side Σx²/sqrt pre-fold in ivf_assign_sql must equal the
     Spark expression fold bit-for-bit (same op sequence, both IEEE

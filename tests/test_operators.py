@@ -478,9 +478,9 @@ def test_exact_substring_dedup_consistent_with_dup_spans(spark, sf_dir):
 
     spans = {
         r.doc_id: r.dup_frac_micro
-        for r in P.QUERIES["docs_dup_spans"](spark, sf_dir).collect()
+        for r in P.docs_dup_spans(spark, sf_dir).collect()
     }
-    sub = P.QUERIES["docs_dedup_substrings"](spark, sf_dir).collect()
+    sub = P.docs_dedup_substrings(spark, sf_dir).collect()
     assert len(sub) == 500
     for r in sub:
         assert 0 <= r.n_removed <= r.n_tokens
